@@ -1,7 +1,9 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.expressions.GraftFunctions
 
 /** Benchmark decontamination for training corpora: flag training
   * documents that share any `n`-token shingle with an evaluation set
@@ -40,25 +42,46 @@ object Decontaminate {
     * `minJaccard`) — catches paraphrased/lightly-edited benchmark
     * leakage that exact shingle collision misses. `isBenchmark` marks
     * the eval side within `corpus`; output is one row per contaminated
-    * TRAINING doc with its match count and worst (highest) Jaccard.
+    * TRAINING doc with its match count (distinct eval docs) and worst
+    * (highest) Jaccard.
     *
-    * Scale shape inherits [[Dedup.minhashLshPairs]] wholesale: map-only
-    * native signatures, banded buckets, one corpus scan in the verify —
-    * the side filter adds nothing.
+    * A broadcast probe, not a self-join: each side is shingled, signed
+    * with the classic MinHash ([[graft.expressions.MinHashSignature]]) and
+    * banded once with [[Dedup.bandRows]]. The small eval side is broadcast as
+    * `(band, key, eval_id, eval_sh)`; the training side streams through
+    * it in one map-side pass with no shuffle, its band rows carrying only
+    * `(doc_id, text)`, and re-shingles only the rows that hit. Each hit is
+    * verified with the same floor-quantized Jaccard as
+    * [[Dedup.minhashLshPairs]], and only verified matches reach the one
+    * `groupBy(doc_id)`. The candidates are exactly the train×eval pairs
+    * that share a band bucket — the cross pairs of `minhashLshPairs` over
+    * the whole corpus — so the output equals filtering its pairs to cross
+    * pairs, without computing (and discarding) the train×train ones.
+    * NULL-text documents have no signature and match nothing.
     */
   def nearDupContaminated(corpus: DataFrame,
-                          isBenchmark: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+                          isBenchmark: Column => Column,
                           shingleSize: Int, bands: Int, rowsPerBand: Int,
                           minJaccard: Double): DataFrame = {
-    val pairs = Dedup.minhashLshPairs(corpus, shingleSize, bands,
-      rowsPerBand, minJaccard)
-    pairs
-      .filter(isBenchmark(col("id_a")) =!= isBenchmark(col("id_b")))
-      .select(
-        when(isBenchmark(col("id_a")), col("id_b")).otherwise(col("id_a"))
-          .as("doc_id"),
-        col("jaccard"))
+    GraftFunctions.register(corpus.sparkSession)
+    val numPerm = bands * rowsPerBand
+    val isEval = isBenchmark(col("doc_id"))
+    def sh(text: Column): Column = Dedup.shingles(text, shingleSize)
+    val evalBands = Dedup.bandRows(
+      corpus.filter(isEval)
+        .select(col("doc_id").as("eval_id"), sh(col("text")).as("eval_sh"))
+        .withColumn("sig", GraftFunctions.minhash(col("eval_sh"), numPerm)),
+      Seq("eval_id", "eval_sh"), bands, rowsPerBand)
+    val trainBands = Dedup.bandRows(
+      corpus.filter(!isEval).select(col("doc_id"), col("text"),
+        GraftFunctions.minhash(sh(col("text")), numPerm).as("sig")),
+      Seq("doc_id", "text"), bands, rowsPerBand)
+    trainBands.join(broadcast(evalBands), Seq("band", "key"))
+      .select(col("doc_id"), col("eval_id"),
+        Dedup.jaccardQ4(sh(col("text")), col("eval_sh")).as("jaccard"))
+      .filter(col("jaccard") >= minJaccard)
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_matches"), max(col("jaccard")).as("max_jaccard"))
+      .agg(count_distinct(col("eval_id")).as("n_matches"),
+        max(col("jaccard")).as("max_jaccard"))
   }
 }

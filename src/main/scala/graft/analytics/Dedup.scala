@@ -72,14 +72,18 @@ object Dedup {
       .select(explode(flatten(transform(col("ms"), (x, i) =>
         transform(slice(col("ms"), i + lit(2), size(col("ms"))), y =>
           struct(x.as("a"), y.as("b")))))).as("p"))
-      // floor-quantize (engine-stable), not round() (.xxxx5 disagreement)
-      .withColumn("jaccard", floor(
-        size(array_intersect(col("p.a.toks"), col("p.b.toks"))).cast("double") /
-          size(array_union(col("p.a.toks"), col("p.b.toks"))).cast("double")
-          * 10000) / 10000.0)
+      .withColumn("jaccard", jaccardQ4(col("p.a.toks"), col("p.b.toks")))
       .filter(col("jaccard") >= minJaccard)
       .select(col("p.a.doc_id").as("id_a"), col("p.b.doc_id").as("id_b"),
         col("jaccard"))
+
+  /** Set Jaccard of two shingle arrays, floor-quantized to 1e-4: identical
+    * IEEE quotients floor the same in every engine, where round()
+    * disagrees at exact .xxxx5 boundaries.
+    */
+  private[analytics] def jaccardQ4(a: Column, b: Column): Column =
+    floor(size(array_intersect(a, b)).cast("double") /
+      size(array_union(a, b)).cast("double") * 10000) / 10000.0
 
   /** Asymmetric shingle CONTAINMENT within blocking buckets:
     * `|A∩B| / |A|` and `|A∩B| / |B|` per candidate pair — the
@@ -382,6 +386,26 @@ object Dedup {
       onePerm = bands * rowsPerBand >= OnePermCutoff)
   }
 
+  /** One row per (document, band) of a signature frame: `carry` plus
+    * `band` and `key = hash(slice(sig, band · rowsPerBand + 1,
+    * rowsPerBand))`. Documents with a NULL signature (NULL text) get no
+    * rows — they are candidates of nothing, like NULL buckets in
+    * [[jaccardPairsBy]]; banding them would put them all in the bucket of
+    * `hash(NULL)`. The NULL test sits inside the explode, not in a
+    * `filter`: the optimizer pushes a filter below the projection that
+    * computes `sig` by inlining it, which signs every document twice.
+    */
+  private[analytics] def bandRows(signed: DataFrame, carry: Seq[String],
+                                  bands: Int, rowsPerBand: Int): DataFrame =
+    signed
+      .select(carry.map(col) :+ explode(when(col("sig").isNotNull,
+        array((0 until bands).map { b =>
+          struct(lit(b).as("band"),
+            hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("key"))
+        }: _*))).as("bs"): _*)
+      .select(carry.map(col) ++
+        Seq(col("bs.band").as("band"), col("bs.key").as("key")): _*)
+
   def minhashLshPairs(docs: DataFrame, shingleSize: Int, bands: Int,
                       rowsPerBand: Int, minJaccard: Double,
                       onePerm: Boolean = false): DataFrame = {
@@ -395,12 +419,8 @@ object Dedup {
     val sig = sh.select(col("doc_id"),
       (if (onePerm) graft.expressions.GraftFunctions.onePermMinhash(col("sh"), numPerm)
        else graft.expressions.GraftFunctions.minhash(col("sh"), numPerm)).as("sig"))
-    val banded = sig.select(col("doc_id"), explode(array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("sig"))
-    }: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-    val cand = bucketPairs(banded, Seq(col("band"), col("sig")), col("doc_id"))
+    val banded = bandRows(sig, Seq("doc_id"), bands, rowsPerBand)
+    val cand = bucketPairs(banded, Seq(col("band"), col("key")), col("doc_id"))
       .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
       .distinct()
     // fetch candidate shingle sets with ONE scan of the corpus: melt
@@ -416,12 +436,7 @@ object Dedup {
           ignoreNulls = true).as("sh_a"),
         first(when(col("doc_id") === col("id_b"), col("sh")),
           ignoreNulls = true).as("sh_b"))
-      // floor-quantize, not round(): identical IEEE quotients floor the
-      // same in every engine; round() disagrees at exact .xxxx5 boundaries
-      .withColumn("jaccard",
-        floor(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double")
-          * 10000) / 10000.0)
+      .withColumn("jaccard", jaccardQ4(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= minJaccard)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }

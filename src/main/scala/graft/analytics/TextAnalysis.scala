@@ -1,7 +1,10 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.nativecol.NativeColumn
+
+import graft.expressions.{TokenShingles, TopTokenCount}
 
 /** Text analysis for large-scale corpus pipelines: token statistics,
   * language identification, quality scoring, fingerprinting. All pure
@@ -17,10 +20,12 @@ object TextAnalysis {
     * Higher-order lambdas evaluate interpreted (no codegen, no
     * common-subexpression elimination), so a lambda body that re-references
     * a non-trivial subtree like `tokens(text)` re-evaluates it per element:
-    * `shingles` re-ran the split once per token window (O(tokens) splits
-    * per doc), `langId`'s argmax chain re-ran each per-language filter ~6×.
-    * Binding evaluates the subtree once per row; the lambda variable is a
+    * `langId`'s argmax chain re-ran each per-language filter ~6×. Binding
+    * evaluates the subtree once per row; the lambda variable is a
     * constant-time reference. Semantics are unchanged (pure substitution).
+    * The per-window text functions (`shingles`, `topTokenFrac`,
+    * `dup2gramFrac`) need no binding: they are native kernels
+    * ([[graft.expressions.TokenShingles]], [[graft.expressions.TopTokenCount]]).
     */
   private[analytics] def bound(value: Column)(f: Column => Column): Column =
     element_at(transform(array(value), f), 1)
@@ -99,15 +104,15 @@ object TextAnalysis {
     aggregate(tokens(text), lit(0L),
       (acc, w) => acc + lit(1L) + floor(length(w) / 5.0).cast("long"))
 
-  /** Distinct `n`-token shingles (windows truncate at the tail; docs
-    * shorter than `n` yield their whole token list as one shingle).
+  /** Distinct `n`-token shingles, in first-occurrence order: the windows
+    * of `n` consecutive tokens of [[tokens]], each joined by `' '` (windows
+    * truncate at the tail; docs shorter than `n` yield their whole token
+    * list as one shingle). One native pass over the UTF-8 bytes
+    * ([[graft.expressions.TokenShingles]]); NULL text yields NULL, so a
+    * NULL document has no shingles rather than one NULL shingle.
     */
   def shingles(text: Column, n: Int): Column =
-    bound(tokens(text)) { tk =>
-      array_distinct(transform(
-        sequence(lit(1), greatest(size(tk) - (n - 1), lit(1))),
-        i => array_join(slice(tk, i, lit(n)), " ")))
-    }
+    NativeColumn(TokenShingles(NativeColumn.expr(text), n))
 
   /** PII scrubbing: emails, phone-shaped digit runs, and IPv4 literals
     * replaced with typed placeholders. Pure `regexp_replace` chain
@@ -136,39 +141,21 @@ object TextAnalysis {
     q4(lit(1.0) - size(array_distinct(tk)).cast("double") / size(tk))
   }
 
-  /** Frequency share of the single most common token.
-    *
-    * O(tokens · log tokens) per doc: sort the token array, then ONE
-    * linear `aggregate` pass tracks the longest run of equal adjacent
-    * tokens — the max occurrence count. (The previous form compared
-    * every distinct token against every token, O(distinct × tokens):
-    * fine at ~54 tokens/doc, quadratic on long documents — r15 verdict
-    * item 3.) Equal strings sort adjacent under array_sort's binary
-    * ordering and `<=>` is the same binary equality, so the max run
-    * length equals the old max count on every input; split() never
-    * yields null tokens, and a null text nulls through `bound`
-    * identically in both forms.
+  /** Frequency share of the single most common token: the native
+    * [[graft.expressions.TopTokenCount]] (one hashed pass, O(tokens)) over
+    * the token count; the quotient stays a Column expression, one IEEE
+    * division that any engine reproduces exactly. NULL text yields NULL.
     */
   def topTokenFrac(text: Column): Column =
-    bound(tokens(text)) { tk =>
-      val top = aggregate(
-        array_sort(tk),
-        struct(lit(null).cast("string").as("prev"), lit(0).as("run"),
-          lit(0).as("best")),
-        (acc, w) => {
-          val run = when(acc("prev") <=> w, acc("run") + 1).otherwise(lit(1))
-          struct(w.as("prev"), run.as("run"),
-            greatest(acc("best"), run).as("best"))
-        },
-        acc => acc("best"))
-      q4(top.cast("double") / size(tk))
-    }
+    q4(NativeColumn(TopTokenCount(NativeColumn.expr(text))).cast("double") /
+      size(tokens(text)))
 
-  /** Fraction of 2-token windows that occur more than once. */
+  /** Fraction of 2-token windows that occur more than once: distinct
+    * 2-shingles over the window count `max(tokens - 1, 1)`. NULL text
+    * yields NULL (`array_size`, unlike `size`, is NULL on NULL under every
+    * `sizeOfNull` setting).
+    */
   def dup2gramFrac(text: Column): Column =
-    bound(tokens(text)) { tk =>
-      val grams = transform(sequence(lit(1), greatest(size(tk) - 1, lit(1))),
-        i => array_join(slice(tk, i, lit(2)), " "))
-      q4(lit(1.0) - size(array_distinct(grams)).cast("double") / size(grams))
-    }
+    q4(lit(1.0) - array_size(shingles(text, 2)).cast("double") /
+      greatest(size(tokens(text)) - 1, lit(1)))
 }

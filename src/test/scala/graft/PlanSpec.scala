@@ -88,6 +88,15 @@ class PlanSpec extends AnyFunSuite {
       "corpus side must not shuffle for the contamination join")
   }
 
+  test("near-dup decontamination probes a broadcast eval side; no self-join") {
+    val p = plan("a_neardup_decontaminate")
+    assert(p.contains("BroadcastHashJoin"), "eval band rows should broadcast")
+    assert(!p.contains("SortMergeJoin"),
+      "training side must not shuffle for the band probe")
+    assert(!p.contains("collect_list"),
+      "no grouped band buckets: the train×train candidates are never built")
+  }
+
   test("sequence packing shuffles once, on the shard key") {
     val p = plan("a_sequence_pack")
     // formatted mode lists each node twice (tree + details)
