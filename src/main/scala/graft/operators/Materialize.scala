@@ -79,16 +79,25 @@ object Materialize {
     * partitioned write — the groupBy-aggregate + re-repartition form paid
     * two).
     *
-    * `writeTasks > 0` pins the exchange's partition count;
-    * `writeTasks <= 0` leaves it to the session (`spark.sql.shuffle
-    * .partitions` as the ceiling, AQE partition coalescing shrinks tiny
-    * epochs to few tasks and leaves large ones wide — the scale-adaptive
-    * form, guide §2).
+    * `writeTasks > 0` places buckets BY ID on exactly `writeTasks`
+    * partitions: bucket b goes to partition `b mod writeTasks`, so each
+    * task holds ⌊buckets/n⌋ or ⌈buckets/n⌉ whole buckets (still one
+    * file per bucket) and AQE cannot coalesce the exchange. A hash
+    * repartition is neither: it puts 16 bucket ids on 3 partitions as
+    * 4 / 8 / 4 (by id: 6 / 5 / 5), and AQE coalesces it by bytes — a
+    * 150-event tail epoch shuffles ~1.7 MB, under the per-partition
+    * minimum, so one task sorted and wrote all 16 buckets while the
+    * other cores idled (pinned to the touched buckets: tail tasks per
+    * epoch 7 → 9, merge p50 −20% to −29% in traced seed-7 pairs).
+    * `writeTasks <= 0` leaves the count to the session (`spark.sql
+    * .shuffle.partitions` as the ceiling, AQE coalescing by size).
     */
   def latestPerKeyToBuckets(rows: DataFrame, writeTasks: Int): DataFrame = {
     graft.expressions.GraftFunctions.register(rows.sparkSession)
     val clustered =
-      if (writeTasks > 0) rows.repartition(writeTasks, col("_bucket"))
+      if (writeTasks > 0)
+        rows.repartitionById(writeTasks,
+          pmod(col("_bucket"), lit(writeTasks.toLong)).cast("int"))
       else rows.repartition(col("_bucket"))
     clustered
       .sortWithinPartitions(col("_bucket"), col("key"),

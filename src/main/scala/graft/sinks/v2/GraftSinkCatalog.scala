@@ -851,16 +851,20 @@ object GraftSinkCatalog {
     * bucket expression: `pmod(xxhash64(struct(<key fields>)), n)` with
     * each literal cast to the stored field type (xxhash64 is
     * width-sensitive — an Int literal for a BIGINT field would hash to
-    * a different bucket than the stored column does). One local
-    * one-row job.
+    * a different bucket than the stored column does). The same Catalyst
+    * tree `lit(v).cast(type)` builds, evaluated on the driver: no
+    * query is planned and no job runs (a one-row `spark.range` select
+    * here cost a 3-task job per lookup).
     */
   private[v2] def bucketOf(spark: SparkSession,
                            vals: Seq[(StructField, Any)], n: Int): Int = {
-    val key = struct(vals.map { case (f, v) =>
-      lit(v).cast(f.dataType).as(f.name) }: _*)
-    spark.range(1)
-      .select(pmod(xxhash64(key), lit(n)).cast("int"))
-      .head.getInt(0)
+    import org.apache.spark.sql.catalyst.expressions.{Cast, CreateNamedStruct,
+      Literal, Pmod, XxHash64}
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    val key = CreateNamedStruct(vals.flatMap { case (f, v) =>
+      Seq(Literal(f.name), Cast(Literal(v), f.dataType, tz)) })
+    Pmod(new XxHash64(Seq(key)), Literal(n.toLong)).eval()
+      .asInstanceOf[Long].toInt
   }
 }
 
@@ -1153,15 +1157,13 @@ private[v2] class CdcSinkTable(kind: String, path: String, ident: String,
   private def prunedForVals(spark: SparkSession,
                             vals: Seq[(StructField, Any)])
       : Option[DataFrame] = {
-    val sink = GraftSinkCatalog.sinkFor(kind, path, props)
-    // the count of the manifest THIS read pins: after a rebucket, a
-    // VERSION AS OF lookup at a pre-rebucket epoch must hash under
-    // the old layout's count, not the current K line
-    sink.layoutBucketCount(asOf).flatMap { n =>
-      val b = GraftSinkCatalog.bucketOf(spark, vals, n)
-      sink.stateBucket(spark, asOf, b).map(raw =>
-        GraftSinkCatalog.stateFrameFrom(spark, Some(raw), schema()))
-    }
+    // one pinned manifest supplies both the count the key hashes under
+    // and the bucket read: after a rebucket, a VERSION AS OF lookup at
+    // a pre-rebucket epoch hashes under the old layout's count, and a
+    // live lookup racing a rebucket never mixes the two layouts
+    GraftSinkCatalog.sinkFor(kind, path, props)
+      .stateBucket(spark, asOf, GraftSinkCatalog.bucketOf(spark, vals, _))
+      .map(raw => GraftSinkCatalog.stateFrameFrom(spark, Some(raw), schema()))
   }
 
   override protected def prunedFrame(spark: SparkSession,

@@ -56,13 +56,13 @@ class BucketedMergeSink(dir: String, buckets: Int = 16,
   private def storedBucketCount: Option[Int] = {
     val fromManifest =
       if (!SinkFs.exists(pointer)) None
-      else kLineOf(new HPath(root, SinkFs.readPointer(pointer)))
+      else kLine(SinkFs.readLines(
+        new HPath(root, SinkFs.readPointer(pointer))))
     fromManifest.orElse(legacyBucketsFile)
   }
 
-  private def kLineOf(mf: HPath): Option[Int] =
-    SinkFs.readLines(mf)
-      .find(_.startsWith("K\t")).map(_.split("\t")(1).trim.toInt)
+  private def kLine(lines: Seq[String]): Option[Int] =
+    lines.find(_.startsWith("K\t")).map(_.split("\t")(1).trim.toInt)
 
   /** Pre-K-line fallback. Only sound for tables never rebucketed —
     * rebucket always writes a K line, so a legacy manifest's count
@@ -134,7 +134,10 @@ class BucketedMergeSink(dir: String, buckets: Int = 16,
       .map(_.group(1).toLong)
 
   private def parseManifest(mf: HPath): Map[Int, (String, String)] =
-    SinkFs.readLines(mf)
+    manifestOf(SinkFs.readLines(mf))
+
+  private def manifestOf(lines: Seq[String]): Map[Int, (String, String)] =
+    lines
       .filter(l => l.nonEmpty && !l.startsWith("K\t")) // K = bucket count
       .map { l =>
         l.split("\t", 3) match {
@@ -192,19 +195,6 @@ class BucketedMergeSink(dir: String, buckets: Int = 16,
       throw new IllegalStateException(s"no committed state at epoch $epochId"))
       .filter(col("op") =!= Envelope.OpDelete).select(col("after.*"))
 
-  /** Layout count of the manifest a read pins: the CURRENT manifest's
-    * K line for live reads, the AS-OF manifest's for pinned ones — a
-    * rebucket between them changes what every bucket id means (see
-    * [[CdcSink.layoutBucketCount]]).
-    */
-  override def layoutBucketCount(asOf: Option[Long]): Option[Int] =
-    if (committedEpoch.isEmpty) None
-    else asOf match {
-      case None => storedBucketCount
-      case Some(e) => versions.filter(_ <= e).lastOption.flatMap(v =>
-        kLineOf(new HPath(root, s"m$v.manifest")).orElse(legacyBucketsFile))
-    }
-
   /** Max merge position: the committed epoch's `.maxpos` sidecar first
     * (O(1) driver metadata — see [[CdcSink.recordMaxPos]]), parquet
     * footer statistics of the current manifest's leaf dirs second
@@ -220,15 +210,20 @@ class BucketedMergeSink(dir: String, buckets: Int = 16,
       .orElse(super.tipPos(spark))
   }
 
-  /** Point-lookup read: ONE bucket's current rows (see
-    * [[CdcSink.stateBucket]]) — the manifest maps the bucket straight
-    * to its single live directory, so the read is one leaf dir.
+  /** Point-lookup read: ONE bucket's rows from ONE pinned manifest
+    * (see [[CdcSink.stateBucket]]) — one pointer read, one manifest
+    * parse for both the `K` line and the bucket entry; the manifest
+    * maps the bucket straight to its single live directory, so the
+    * read is one leaf dir.
     */
   override def stateBucket(spark: SparkSession, asOf: Option[Long],
-                           bucket: Int): Option[DataFrame] = {
-    val m = asOf.map(manifestAt).getOrElse(manifest)
+                           bucketOf: Int => Int): Option[DataFrame] = {
+    val lines = SinkFs.readLines(
+      pinnedArtifact(root, pointer, asOf).getOrElse(return None))
+    val k = kLine(lines).orElse(legacyBucketsFile).getOrElse(return None)
+    val m = manifestOf(lines)
     if (m.isEmpty) return None
-    m.get(bucket) match {
+    m.get(bucketOf(k)) match {
       case Some((p, _)) if !SinkFs.exists(new HPath(p)) => None // eroded
       case Some(ref) => readBuckets(spark, Seq(ref))
       case None => // the bucket holds no rows: empty frame, known schema
@@ -498,15 +493,20 @@ class BucketedMergeSink(dir: String, buckets: Int = 16,
         .filter(col("_bucket").isin(touched.toSeq.map(_.toLong): _*)))
     // by-name union with missing columns allowed: same evolution
     // semantics as MergeSink (a batch under an evolved schema merges
-    // into older state). Reduce + write clustering in ONE exchange;
-    // writeTasks <= 0 = session/AQE-adaptive partition count (tiny
-    // epochs coalesce to few tasks, large ones stay wide — guide §2)
+    // into older state). Reduce + write clustering in ONE exchange on
+    // min(touched, cores) tasks, buckets placed by id: left to AQE, a
+    // small epoch's exchange (under its per-partition minimum size)
+    // coalesced into ONE task that sorted and wrote every touched
+    // bucket while the other cores idled — the driver already holds
+    // `touched`, so the count costs nothing
+    val writeTasks = math.min(touched.size max 1,
+      spark.sparkContext.defaultParallelism)
     val merged = Materialize.latestPerKeyToBuckets(
       prevTouched match {
         case None => incoming
         case Some(prev) =>
           prev.unionByName(incoming, allowMissingColumns = true)
-      }, writeTasks = 0)
+      }, writeTasks)
     val vdir = new HPath(root, s"v$epochId").toString
     // the rewritten buckets' max position rides the write job as an
     // observed metric (zero extra I/O) — feeds the tip sidecar below
@@ -515,9 +515,9 @@ class BucketedMergeSink(dir: String, buckets: Int = 16,
     val ddl = org.apache.spark.sql.types.StructType(
       merged.schema.filterNot(_.name == "_bucket")).toDDL
     // already clustered AND sorted by _bucket (latestPerKeyToBuckets):
-    // the sorted dynamic-partition write streams each task's buckets
-    // through one rolling writer with no further exchange or sort —
-    // write parallelism is bounded by the cluster, not the bucket count
+    // the sorted dynamic-partition write streams each task's whole
+    // buckets through one rolling writer with no further exchange or
+    // sort — one file per bucket, `writeTasks` writers in parallel
     observed
       .write.mode("overwrite").options(CdcSink.writeOptions).partitionBy("_bucket").parquet(vdir)
     val newManifest = prevManifest ++

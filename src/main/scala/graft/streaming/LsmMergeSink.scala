@@ -58,13 +58,13 @@ class LsmMergeSink(dir: String, buckets: Int = 16, compactEvery: Int = 8)
   private def storedBucketCount: Option[Int] = {
     val fromManifest =
       if (!SinkFs.exists(pointer)) None
-      else kLineOf(new HPath(root, SinkFs.readPointer(pointer)))
+      else kLine(SinkFs.readLines(
+        new HPath(root, SinkFs.readPointer(pointer))))
     fromManifest.orElse(legacyBucketsFile)
   }
 
-  private def kLineOf(mf: HPath): Option[Int] =
-    SinkFs.readLines(mf)
-      .find(_.startsWith("K\t")).map(_.split("\t")(1).trim.toInt)
+  private def kLine(lines: Seq[String]): Option[Int] =
+    lines.find(_.startsWith("K\t")).map(_.split("\t")(1).trim.toInt)
 
   /** Pre-K-line fallback — sound only for never-rebucketed tables
     * (rebucket always writes a K line).
@@ -135,8 +135,11 @@ class LsmMergeSink(dir: String, buckets: Int = 16, compactEvery: Int = 8)
       throw new IllegalStateException(s"no committed state at epoch $epochId"))
       .filter(col("op") =!= Envelope.OpDelete).select(col("after.*"))
 
-  private def parseManifest(mf: HPath): Manifest = {
-    val lines = SinkFs.readLines(mf).filter(_.nonEmpty)
+  private def parseManifest(mf: HPath): Manifest =
+    manifestOf(SinkFs.readLines(mf))
+
+  private def manifestOf(all: Seq[String]): Manifest = {
+    val lines = all.filter(_.nonEmpty)
     val base = lines.filter(_.startsWith("B\t")).map { l =>
       val Array(_, b, p, ddl) = l.split("\t", 4)
       b.toInt -> (absPath(p), ddl)
@@ -218,28 +221,21 @@ class LsmMergeSink(dir: String, buckets: Int = 16, compactEvery: Int = 8)
     s.filter(col("op") =!= Envelope.OpDelete).select(col("after.*"))
   }
 
-  /** Layout count of the manifest a read pins (see
-    * [[BucketedMergeSink.layoutBucketCount]] — a rebucket between the
-    * pinned and current manifests changes what bucket ids mean).
-    */
-  override def layoutBucketCount(asOf: Option[Long]): Option[Int] =
-    if (committedEpoch.isEmpty) None
-    else asOf match {
-      case None => storedBucketCount
-      case Some(e) => versions.filter(_ <= e).lastOption.flatMap(v =>
-        kLineOf(new HPath(root, s"m$v.manifest")).orElse(legacyBucketsFile))
-    }
-
   /** Point-lookup read: merge-on-read over ONE bucket — its base dir
-    * plus only the deltas that touched it (see [[CdcSink.stateBucket]]).
-    * Reuses [[stateOf]] on a bucket-restricted manifest, so the
-    * untouched-bucket verbatim path and the hot merge path behave
-    * exactly like the full read, just over one bucket.
+    * plus only the deltas that touched it — from ONE pinned manifest
+    * (see [[CdcSink.stateBucket]]). Reuses [[stateOf]] on a
+    * bucket-restricted manifest, so the untouched-bucket verbatim path
+    * and the hot merge path behave exactly like the full read, just
+    * over one bucket.
     */
   override def stateBucket(spark: SparkSession, asOf: Option[Long],
-                           bucket: Int): Option[DataFrame] = {
-    val m = asOf.map(manifestAt).getOrElse(manifest)
+                           bucketOf: Int => Int): Option[DataFrame] = {
+    val lines = SinkFs.readLines(
+      pinnedArtifact(root, pointer, asOf).getOrElse(return None))
+    val k = kLine(lines).orElse(legacyBucketsFile).getOrElse(return None)
+    val m = manifestOf(lines)
     if (m.base.isEmpty && m.deltas.isEmpty) return None
+    val bucket = bucketOf(k)
     val restricted = Manifest(
       m.base.filter(_._1 == bucket),
       m.deltas.filter(_._4.contains(bucket))

@@ -90,31 +90,40 @@ trait CdcSink {
   def changesAt(spark: SparkSession, epoch: Long,
                 prevEpoch: Option[Long]): Option[DataFrame] = None
 
-  /** The committed bucket count of the sink's on-disk layout, when it
-    * HAS a bucket layout (None: the full-rewrite kind, or nothing
-    * committed yet). Point-lookup pruning hashes a full-key equality
-    * predicate with this count to resolve the one bucket that can hold
-    * the key — it must be the LAYOUT's count (the manifest `K` line),
-    * never a configured value that might have drifted from it. With
-    * `asOf` set, the count of the manifest THAT read pins: after a
-    * rebucket (16→4), a `VERSION AS OF` lookup at a pre-rebucket epoch
-    * must hash under the OLD count — hashing with the current one would
-    * probe a bucket id that means something else in the pinned layout
-    * and silently miss the row.
-    */
-  def layoutBucketCount(asOf: Option[Long]): Option[Int] = None
-
   /** Reduced state restricted to ONE key-hash bucket — the point-lookup
     * read path: a full-key equality predicate resolves to exactly one
     * bucket, so the scan reads that bucket's files instead of the
     * table (at 100 TB: one bucket + its deltas, not 10k buckets).
-    * `asOf` bounds like [[stateAt]]. None = cannot prune soundly (no
-    * bucket layout, vacuumed artifacts) — the caller falls back to the
-    * full state; a bucket that simply holds no rows returns an EMPTY
-    * frame, not None.
+    *
+    * The read pins ONE manifest (CURRENT for live reads, the newest
+    * committed ≤ `asOf` for pinned ones) and takes everything from it:
+    * `bucketOf` receives THAT manifest's layout count (its `K` line,
+    * never a configured value that might have drifted) and the bucket
+    * it returns is read from the same manifest. Resolving the count and
+    * the bucket entry from two separate pointer reads would let a
+    * rebucket that commits between them (16→4) hash the key under one
+    * layout and probe the other — a silently missing row; the same
+    * holds for a `VERSION AS OF` read across a rebucket.
+    *
+    * None = cannot prune soundly (no bucket layout, nothing committed,
+    * vacuumed artifacts) — the caller falls back to the full state; a
+    * bucket that simply holds no rows returns an EMPTY frame, not None.
     */
   def stateBucket(spark: SparkSession, asOf: Option[Long],
-                  bucket: Int): Option[DataFrame] = None
+                  bucketOf: Int => Int): Option[DataFrame] = None
+
+  /** The commit artifact a read pins: the CURRENT pointer's target for
+    * live reads (one pointer read), the newest committed version ≤
+    * `asOf` for time travel. None when nothing is committed (as of it).
+    */
+  protected final def pinnedArtifact(rootDir: HPath, pointerFile: HPath,
+                                     asOf: Option[Long]): Option[HPath] =
+    asOf match {
+      case None =>
+        if (!SinkFs.exists(pointerFile)) None
+        else Some(new HPath(rootDir, SinkFs.readPointer(pointerFile)))
+      case Some(e) => versions.filter(_ <= e).lastOption.map(commitArtifact)
+    }
 
   /** Oldest epoch whose `$changes` rows are still derivable after
     * retention erosion, if the sink TRACKS erosion (None = no erosion

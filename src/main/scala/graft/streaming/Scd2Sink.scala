@@ -89,8 +89,11 @@ class Scd2Sink(dir: String, buckets: Int = 16, compactEvery: Int = 8,
     if (!SinkFs.exists(pointer)) Manifest(Map.empty, Map.empty, Seq.empty)
     else parseManifest(new HPath(root, SinkFs.readPointer(pointer)))
 
-  private def parseManifest(mf: HPath): Manifest = {
-    val lines = SinkFs.readLines(mf).filter(_.nonEmpty)
+  private def parseManifest(mf: HPath): Manifest =
+    manifestOf(mf, SinkFs.readLines(mf))
+
+  private def manifestOf(mf: HPath, all: Seq[String]): Manifest = {
+    val lines = all.filter(_.nonEmpty)
     // fail FAST on a pre-LSM layout (untagged '<bucket>\t<path>' lines):
     // silently matching nothing would discard the stored history while
     // committedEpoch still reports the old epoch — replayed epochs would
@@ -153,13 +156,13 @@ class Scd2Sink(dir: String, buckets: Int = 16, compactEvery: Int = 8,
   private def storedBucketCount: Option[Int] = {
     val fromManifest =
       if (!SinkFs.exists(pointer)) None
-      else kLineOf(new HPath(root, SinkFs.readPointer(pointer)))
+      else kLine(SinkFs.readLines(
+        new HPath(root, SinkFs.readPointer(pointer))))
     fromManifest.orElse(legacyBucketsFile)
   }
 
-  private def kLineOf(mf: HPath): Option[Int] =
-    SinkFs.readLines(mf)
-      .find(_.startsWith("K\t")).map(_.split("\t")(1).trim.toInt)
+  private def kLine(lines: Seq[String]): Option[Int] =
+    lines.find(_.startsWith("K\t")).map(_.split("\t")(1).trim.toInt)
 
   /** Pre-K-line fallback — sound only for never-rebucketed tables
     * (rebucket always writes a K line).
@@ -264,26 +267,18 @@ class Scd2Sink(dir: String, buckets: Int = 16, compactEvery: Int = 8,
     */
   def state(spark: SparkSession): Option[DataFrame] = stateOf(spark, manifest)
 
-  /** Layout count of the manifest a read pins (see
-    * [[BucketedMergeSink.layoutBucketCount]] — a rebucket between the
-    * pinned and current manifests changes what bucket ids mean).
-    */
-  override def layoutBucketCount(asOf: Option[Long]): Option[Int] =
-    if (committedEpoch.isEmpty) None
-    else asOf match {
-      case None => storedBucketCount
-      case Some(e) => versions.filter(_ <= e).lastOption.flatMap(v =>
-        kLineOf(new HPath(root, s"m$v.manifest")).orElse(legacyBucketsFile))
-    }
-
-  /** Point-lookup read: ONE bucket's open set (see
-    * [[CdcSink.stateBucket]]) — the live table is exactly the open
+  /** Point-lookup read: ONE bucket's open set from ONE pinned manifest
+    * (see [[CdcSink.stateBucket]]) — the live table is exactly the open
     * versions, so the lookup never touches closed history.
     */
   override def stateBucket(spark: SparkSession, asOf: Option[Long],
-                           bucket: Int): Option[DataFrame] = {
-    val m = asOf.map(manifestAt).getOrElse(manifest)
+                           bucketOf: Int => Int): Option[DataFrame] = {
+    val mf = pinnedArtifact(root, pointer, asOf).getOrElse(return None)
+    val lines = SinkFs.readLines(mf)
+    val k = kLine(lines).orElse(legacyBucketsFile).getOrElse(return None)
+    val m = manifestOf(mf, lines)
     if (m.open.isEmpty && m.base.isEmpty && m.deltas.isEmpty) return None
+    val bucket = bucketOf(k)
     val ref = m.open.filter(_._1 == bucket)
     // eroded open data → full-read fallback (strict stateAt errors)
     if (ref.values.exists(r => !SinkFs.exists(new HPath(r._1)))) return None

@@ -26,6 +26,43 @@ class BucketedMergeSinkSpec extends AnyFunSuite {
     assert(canon(sink.view(spark)) == canon(Materialize.latestState(feed)))
   }
 
+  test("every bucket an epoch rewrites is one data file") {
+    val feed = ChangeFeedGen.standardFeed(
+      Tables.load(spark, sfDir, "orders"), "orders")
+    val dir = Files.createTempDirectory("bsink-files")
+    val sink = new BucketedMergeSink(dir.toString, buckets = 8)
+    sink.merge(feed.filter(col("op") === "r"), 0L)
+    sink.merge(feed.filter(col("op") =!= "r"), 1L)
+    for (v <- Seq("v0", "v1")) {
+      val bucketDirs = Files.list(dir.resolve(v)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("_bucket="))
+      assert(bucketDirs.size >= 2, s"$v touched ${bucketDirs.size} buckets")
+      bucketDirs.foreach { b =>
+        val files = Files.list(b).toArray.toSeq
+          .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+          .filter(_.endsWith(".parquet"))
+        assert(files.size == 1, s"$b: ${files.mkString(", ")}")
+      }
+    }
+  }
+
+  test("a pinned write-task count places buckets by id: n partitions, " +
+      "partition p holds exactly the buckets ≡ p (mod n)") {
+    val rows = spark.range(0L, 4000L, 1L, 3).select(
+      struct((col("id") % 900).as("k")).as("key"), col("id").as("pos"),
+      (col("id") % 16).as("_bucket"))
+    for (n <- Seq(1, 3, 16)) {
+      val out = Materialize.latestPerKeyToBuckets(rows, n)
+      assert(out.rdd.getNumPartitions == n, s"n=$n")
+      val placed = out.select(spark_partition_id(), col("_bucket"))
+        .distinct().collect().map(r => (r.getInt(0), r.getLong(1)))
+      assert(placed.map(_._2).sorted.toSeq == (0L until 16L), s"n=$n")
+      assert(placed.forall { case (p, b) => b % n == p }, s"n=$n: " +
+        placed.sorted.mkString(" "))
+    }
+  }
+
   test("replaying a committed epoch is a no-op; bucket count is pinned") {
     val feed = ChangeFeedGen.standardFeed(
       Tables.load(spark, sfDir, "supplier"), "supplier")

@@ -39,21 +39,24 @@ class PointLookupSpec extends AnyFunSuite {
     df.select(cols.map(col): _*).collect().map(_.mkString("|")).sorted.toSeq
   }
 
-  /** Input bytes the tasks of `body`'s jobs read (job-group scoped —
-    * concurrent suites on the shared session cannot skew it; the
-    * listener bus is async, so poll until stable like
+  /** Jobs `body` runs and the input bytes their tasks read (job-group
+    * scoped — concurrent suites on the shared session cannot skew it;
+    * the listener bus is async, so poll until stable like
     * PlanSpec.jobsDuring).
     */
-  private def bytesDuring(body: => Unit): Long = {
+  private def jobsAndBytesDuring(body: => Unit): (Int, Long) = {
     val group = s"point-lookup-${java.util.UUID.randomUUID()}"
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new AtomicLong
     val bytes = new AtomicLong
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         if (Option(j.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
+            _.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
           j.stageIds.foreach(id => stages.add(id): Unit)
+        }
       }
       override def onTaskEnd(
           t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -62,17 +65,17 @@ class PointLookupSpec extends AnyFunSuite {
       }
     }
     spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(group, "PointLookupSpec.bytesDuring",
+    spark.sparkContext.setJobGroup(group, "PointLookupSpec.jobsAndBytesDuring",
       interruptOnCancel = false)
     try {
       body
       val deadline = System.nanoTime + 3_000_000_000L
-      var last = -1L
-      while (System.nanoTime < deadline && bytes.get != last) {
-        last = bytes.get
+      var last = (-1L, -1L)
+      while (System.nanoTime < deadline && (jobs.get, bytes.get) != last) {
+        last = (jobs.get, bytes.get)
         Thread.sleep(200)
       }
-      bytes.get
+      (jobs.get.toInt, bytes.get)
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(l)
@@ -115,13 +118,26 @@ class PointLookupSpec extends AnyFunSuite {
         s"WHERE key.o_orderkey = $absent AND op <> 'd'").count() == 0)
       // I/O bound: the lookup reads ~1/16th of the buckets; 4x margin
       // for footers and the lsm delta leafs
-      val full = bytesDuring {
+      val (_, full) = jobsAndBytesDuring {
         spark.sql(s"SELECT after.* FROM $name WHERE op <> 'd'")
           .collect(): Unit
       }
-      val pruned = bytesDuring { point.collect(): Unit }
+      val (jobs, pruned) = jobsAndBytesDuring { point.collect(): Unit }
       assert(pruned > 0 && pruned < full / 4,
         s"$kind point lookup read $pruned of $full bytes — not pruned")
+      // the key hashes on the driver: the lookup's only job is its
+      // read. An outstanding lsm delta makes that read a merge-on-read
+      // reduce, whose shuffle AQE runs as one more job; folded, it is one
+      if (kind != "lsm") assert(jobs == 1, s"$kind point lookup ran $jobs jobs")
+      else {
+        assert(jobs == 2, s"lsm point lookup over a delta ran $jobs jobs")
+        val short = name.split("\\.", 3)(2)
+        spark.sql(s"CALL $cat.system.compact(table => 'lsm.$short')")
+          .collect()
+        val (folded, _) = jobsAndBytesDuring { point.collect(): Unit }
+        assert(folded == 1, s"compacted lsm point lookup ran $folded jobs")
+        assert(canon(point) == expected)
+      }
     }
   }
 
@@ -141,11 +157,11 @@ class PointLookupSpec extends AnyFunSuite {
     val (present, _) = keys(name)
     val before = spark.sql(s"SELECT count(*) FROM $name WHERE op <> 'd'")
       .head.getLong(0)
-    val full = bytesDuring {
+    val (_, full) = jobsAndBytesDuring {
       spark.sql(s"SELECT after.* FROM $name WHERE op <> 'd'")
         .collect(): Unit
     }
-    val pruned = bytesDuring {
+    val (_, pruned) = jobsAndBytesDuring {
       spark.sql(s"DELETE FROM $name WHERE key.o_orderkey = $present")
     }
     assert(spark.sql(s"SELECT count(*) FROM $name " +
@@ -181,6 +197,43 @@ class PointLookupSpec extends AnyFunSuite {
       assert(canon(spark.sql(s"SELECT after.* FROM $name " +
         s"WHERE key.o_orderkey = $present AND op <> 'd'")) == expectAt1,
         s"$kind: post-rebucket live lookup lost the row")
+    }
+  }
+
+  test("a point read pins ONE manifest: a rebucket that commits while " +
+      "the key hashes still reads the row under the pinned layout") {
+    import graft.streaming.{BucketedMergeSink, CdcSink, LsmMergeSink, Scd2Sink}
+    val feed = ChangeFeedGen.standardFeed(
+      Tables.load(spark, sfDir, "orders"), "orders")
+    val kinds = Seq[(String, String => CdcSink, CdcSink => Unit)](
+      ("bucketed", new BucketedMergeSink(_, 16),
+        s => s.asInstanceOf[BucketedMergeSink].rebucket(spark, 4, 2L): Unit),
+      ("lsm", new LsmMergeSink(_, 16, compactEvery = 100),
+        s => s.asInstanceOf[LsmMergeSink].rebucket(spark, 4, 2L): Unit),
+      ("scd2", new Scd2Sink(_, 16, compactEvery = 100),
+        s => s.asInstanceOf[Scd2Sink].rebucket(spark, 4, 2L): Unit))
+    for ((kind, open, rebucket) <- kinds) {
+      val sink = open(Files.createTempDirectory(s"pl-pin-$kind").toString)
+      sink.merge(feed.filter(col("op") === "r"), 0L)
+      sink.merge(feed.filter(col("op") =!= "r"), 1L)
+      val live = sink.state(spark).get.filter(col("op") =!= "d")
+      val present = live.agg(min(col("key.o_orderkey"))).head.getLong(0)
+      val mine = live.filter(col("key.o_orderkey") === present)
+      val want = mine.select(col("after")).collect().toSeq
+      assert(want.length == 1, s"$kind setup: $want")
+      val bucketUnder = Seq(16, 4).map(k => k ->
+        mine.select(pmod(xxhash64(col("key")), lit(k))).head.getLong(0).toInt)
+        .toMap
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val got = sink.stateBucket(spark, None, { k =>
+        seen += k
+        rebucket(sink) // commits 16 -> 4 before the bucket is known
+        bucketUnder(k)
+      }).get.filter(col("key.o_orderkey") === present)
+        .select(col("after")).collect().toSeq
+      assert(seen == Seq(16), s"$kind hashed under $seen")
+      assert(got == want, s"$kind: the pinned read lost the row")
+      assert(sink.committedEpoch.contains(2L), s"$kind: rebucket not committed")
     }
   }
 
