@@ -53,13 +53,10 @@ class BucketedMergeSink(dir: String, buckets: Int = 16,
     * file could survive a crash describing the other side's layout) —
     * falling back to the legacy `_buckets` file for pre-K manifests.
     */
-  private def storedBucketCount: Option[Int] = {
-    val fromManifest =
-      if (!SinkFs.exists(pointer)) None
-      else kLine(SinkFs.readLines(
-        new HPath(root, SinkFs.readPointer(pointer))))
-    fromManifest.orElse(legacyBucketsFile)
-  }
+  private def storedBucketCount: Option[Int] =
+    pinnedArtifact(root, pointer, None)
+      .flatMap(mf => kLine(SinkFs.readLines(mf)))
+      .orElse(legacyBucketsFile)
 
   private def kLine(lines: Seq[String]): Option[Int] =
     lines.find(_.startsWith("K\t")).map(_.split("\t")(1).trim.toInt)

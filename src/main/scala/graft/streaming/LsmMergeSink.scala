@@ -55,13 +55,10 @@ class LsmMergeSink(dir: String, buckets: Int = 16, compactEvery: Int = 8)
         SinkFs.writeString(new HPath(root, "_buckets"), buckets.toString)
     }
 
-  private def storedBucketCount: Option[Int] = {
-    val fromManifest =
-      if (!SinkFs.exists(pointer)) None
-      else kLine(SinkFs.readLines(
-        new HPath(root, SinkFs.readPointer(pointer))))
-    fromManifest.orElse(legacyBucketsFile)
-  }
+  private def storedBucketCount: Option[Int] =
+    pinnedArtifact(root, pointer, None)
+      .flatMap(mf => kLine(SinkFs.readLines(mf)))
+      .orElse(legacyBucketsFile)
 
   private def kLine(lines: Seq[String]): Option[Int] =
     lines.find(_.startsWith("K\t")).map(_.split("\t")(1).trim.toInt)
