@@ -36,6 +36,7 @@ object Verify {
     // of being silently deleted. Under only=, sibling dumps from the
     // full invocation survive a partial iteration.
     val outPath = Paths.get(outDir)
+    def own(n: String) = n == "oracle_sql.json" || n == "selected.json"
     if (Files.exists(outPath)) {
       import scala.jdk.CollectionConverters._
       val known = SparkEntry.queries.keySet
@@ -53,7 +54,7 @@ object Verify {
         _.iterator().asScala.toSeq)
       val foreign = entries.filterNot { p =>
         val n = p.getFileName.toString
-        n == "oracle_sql.json" || known.contains(n) || looksLikeDump(p)
+        own(n) || known.contains(n) || looksLikeDump(p)
       }
       require(foreign.isEmpty,
         s"refusing to clean $outDir: contains non-query entries " +
@@ -61,7 +62,7 @@ object Verify {
           " — is this really a Verify output directory?")
       val stale = entries.filter { p =>
         val n = p.getFileName.toString
-        n == "oracle_sql.json" ||
+        own(n) ||
           ((known.contains(n) || looksLikeDump(p)) &&
             only.forall(_.contains(n)))
       }
@@ -99,6 +100,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // the queries this run was asked for, so a targeted check judges
+    // exactly those (oracle_sql.json always lists every query)
+    Files.writeString(Paths.get(s"$outDir/selected.json"),
+      SparkEntry.queries.keys.filter(n => only.forall(_.contains(n)))
+        .toSeq.sorted.map(q).mkString("[", ",", "]"))
     spark.stop()
   }
 }

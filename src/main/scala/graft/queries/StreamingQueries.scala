@@ -816,8 +816,8 @@ object StreamingQueries extends QueryGroup {
     // feed serves each epoch's change-delta SIDECAR (O(|batch|) bytes)
     // instead of the touched-bucket derivation, whose I/O is
     // bucket-bound — O(table) for a scattered update epoch
-    // (ChangefeedScaleProbe: 85 MB vs 0.2 MB per 1000-row epoch at
-    // 1.5M rows). Reconstruction contract unchanged — same oracle.
+    // (measured: 85 MB vs 0.2 MB per 1000-row epoch at 1.5M rows,
+    // NOTES.md). Reconstruction contract unchanged — same oracle.
     "k2_changes_bucketed_cf" -> ((s, dir) => {
       val fd = feed(s, dir, "orders")
       val tbl = "orders_" + java.util.UUID.randomUUID().toString.take(8)

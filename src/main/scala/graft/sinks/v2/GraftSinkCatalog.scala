@@ -269,8 +269,8 @@ class GraftSinkCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** `TIMESTAMP AS OF <t>` — Spark passes MICROSECONDS since epoch.
-    * Resolved to the newest epoch whose commit time (manifest/version
-    * mtime, microseconds before the atomic swap) is ≤ t, then served
+    * Resolved to the newest epoch whose commit time (the `.committs`
+    * sidecar, written microseconds before the atomic swap) is ≤ t, then served
     * exactly like `VERSION AS OF` of that epoch.
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {

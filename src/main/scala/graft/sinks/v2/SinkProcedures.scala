@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, Proced
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.streaming.{BucketedMergeSink, LsmMergeSink, MergeSink, Scd2Sink, SinkFs}
+import graft.streaming.{LsmMergeSink, ManifestSink, MergeSink, SinkFs}
 
 /** TABLE-MAINTENANCE procedures of the sink catalog, callable as SQL —
   * Spark 4's native `ProcedureCatalog` contract (the Iceberg
@@ -128,9 +128,7 @@ private[v2] class VacuumProcedure(root: String)
     val retainFeed = if (input.isNullAt(1)) -1 else input.getInt(1)
     val sink = GraftSinkCatalog.sinkFor(kind, dir, props)
     val deleted = sink match {
-      case s: LsmMergeSink => s.vacuum()
-      case s: BucketedMergeSink => s.vacuum()
-      case s: Scd2Sink => s.vacuum()
+      case s: ManifestSink => s.vacuum()
       case s: MergeSink => s.vacuum()
       case other => throw new IllegalStateException(
         s"no vacuum for ${other.getClass.getSimpleName}")
@@ -146,13 +144,12 @@ private[v2] class VacuumProcedure(root: String)
             "feed retention needs a committed epoch"))
         val floor = math.max(0L, tip - retainFeed + 1L)
         sink match {
-          case s: BucketedMergeSink => s.vacuumFeed(floor)
-          case s: Scd2Sink => s.vacuumFeed(floor)
-          case s: MergeSink => s.vacuumFeed(floor)
           case _: LsmMergeSink => throw new UnsupportedOperationException(
             "lsm delta dirs ARE the table's pending state, not sidecars " +
               "— plain vacuum already reclaims them once compacted; " +
               "retain_feed_epochs does not apply")
+          case s: ManifestSink => s.vacuumFeed(floor)
+          case s: MergeSink => s.vacuumFeed(floor)
           case other => throw new IllegalStateException(
             s"no feed vacuum for ${other.getClass.getSimpleName}")
         }
@@ -225,9 +222,7 @@ private[v2] class RebucketProcedure(root: String)
         s"rebucket needs committed state — '$kind.${new HPath(dir).getName}' " +
           "has no committed epoch"))
     sink match {
-      case s: LsmMergeSink => s.rebucket(spark, newBuckets, epoch): Unit
-      case s: BucketedMergeSink => s.rebucket(spark, newBuckets, epoch): Unit
-      case s: Scd2Sink => s.rebucket(spark, newBuckets, epoch): Unit
+      case s: ManifestSink => s.rebucket(spark, newBuckets, epoch): Unit
       case _: MergeSink => throw new UnsupportedOperationException(
         "full-kind tables have no bucket layout — rebucket applies to " +
           "lsm/bucketed/scd2")

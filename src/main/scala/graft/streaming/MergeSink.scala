@@ -136,19 +136,12 @@ trait CdcSink {
   def changefeedFloor: Option[Long] = None
 
   /** Highest merge position the committed table has seen — the
-    * watermark a DML epoch must outrank under latest-by-pos. The
-    * default reads the reduced state's max `pos`; scd2 overrides
-    * because a tombstoned key's CLOSING position has no state row (the
-    * open-rows max under-counts exactly when the newest event was a
-    * delete).
+    * watermark a DML epoch must outrank under latest-by-pos: the
+    * committed epoch's `.maxpos` sidecar (O(1) driver metadata, see
+    * [[recordMaxPos]]).
     */
   def tipPos(spark: SparkSession): Option[Long] =
-    state(spark).flatMap { s =>
-      Option(s.agg(max(col("pos"))).head.get(0)).map {
-        case l: java.lang.Long => l.longValue()
-        case other => other.toString.toLong
-      }
-    }
+    committedEpoch.flatMap(storedMaxPos)
 
   /** The filesystem artifact that marks `epoch`'s commit (written
     * microseconds before the atomic CURRENT swap). Its PERSISTED
@@ -180,15 +173,9 @@ trait CdcSink {
     SinkFs.writeString(commitTsFile(epoch),
       System.currentTimeMillis().toString)
 
-  /** Commit time of a committed epoch: the persisted sidecar when
-    * present, else the artifact mtime (legacy fallback for sinks
-    * written before sidecars existed).
-    */
-  def commitTimeMillis(epoch: Long): Long = {
-    val f = commitTsFile(epoch)
-    if (SinkFs.exists(f)) SinkFs.readString(f).trim.toLong
-    else SinkFs.mtime(commitArtifact(epoch))
-  }
+  /** Commit time of a committed epoch: its persisted sidecar. */
+  def commitTimeMillis(epoch: Long): Long =
+    CdcSink.requiredSidecar(commitTsFile(epoch)).toLong
 
   /** Newest committed epoch whose commit time ≤ `tsMillis` (TIMESTAMP
     * AS OF). Lazy from the newest version down — the common
@@ -201,32 +188,36 @@ trait CdcSink {
   /** Sidecar persisting the sink's TIP POSITION (the max merge position
     * every DML statement must outrank — see [[tipPos]]) as of `epoch`'s
     * commit. Written at commit time from the PREVIOUS epoch's sidecar +
-    * footer statistics of only the epoch's OWN new files, so `tipPos`
-    * becomes O(1) driver metadata instead of O(#files) footer opens —
-    * the Iceberg manifest-stats design (snapshot summaries carry
-    * file-level bounds so planning never re-opens footers).
-    * [[SinkFs.parquetMaxLong]] remains the back-compat fallback for
-    * epochs committed before the sidecar existed; a one-time bootstrap
-    * at the next commit upgrades such tables permanently.
+    * the epoch's OWN write job's observed max, so `tipPos` is O(1)
+    * driver metadata instead of O(#files) footer opens — the Iceberg
+    * manifest-stats design (snapshot summaries carry file-level bounds
+    * so planning never re-opens footers).
     */
   private def maxPosFile(epoch: Long): HPath = {
     val a = commitArtifact(epoch)
     new HPath(a.getParent, a.getName + ".maxpos")
   }
 
-  /** Persist the tip-position sidecar for `epoch` (no-op when the tip
-    * is unknown — footer stats missing — so reads keep falling back).
+  /** Persist the tip-position sidecar for `epoch` — on EVERY commit; an
+    * empty payload records a table that has no positions yet.
     */
   protected final def recordMaxPos(epoch: Long, tip: Option[Long]): Unit =
-    tip.foreach(t => SinkFs.writeString(maxPosFile(epoch), t.toString))
+    SinkFs.writeString(maxPosFile(epoch), tip.fold("")(_.toString))
 
-  /** The persisted tip position of a committed epoch, absent for
-    * pre-sidecar epochs (callers fall back to footer stats / scan).
+  /** Persist `epoch`'s tip as the max of the committed tip it builds on
+    * and the positions the epoch itself wrote (`added`, its write job's
+    * observed max) — every rewrite keeps each key's newest position,
+    * so the max never needs the files again.
     */
-  protected final def storedMaxPos(epoch: Long): Option[Long] = {
-    val f = maxPosFile(epoch)
-    if (SinkFs.exists(f)) SinkFs.readString(f).trim.toLongOption else None
-  }
+  protected final def recordTip(epoch: Long, committed: Option[Long],
+                                added: Option[Long]): Unit =
+    recordMaxPos(epoch, (committed.flatMap(storedMaxPos) ++ added).maxOption)
+
+  /** The persisted tip position of a committed epoch (None = no
+    * positions yet); a committed epoch without the sidecar is refused.
+    */
+  protected final def storedMaxPos(epoch: Long): Option[Long] =
+    CdcSink.requiredSidecar(maxPosFile(epoch)).toLongOption
 
   /** On-disk claim file marking an IN-FLIGHT commit of `epoch` (next to
     * the commit artifact; deleted on commit or failure, so its presence
@@ -238,19 +229,73 @@ trait CdcSink {
     new HPath(a.getParent, s"epoch$epoch.claim")
   }
 
-  /** Exclusively claim `epoch` before writing any of its artifacts.
-    * Throws [[ConcurrentEpochCommitException]] when another writer holds
-    * it. MUST be paired with [[releaseClaim]] in a finally — a claim
-    * that escapes its commit wedges the epoch until the stale window.
+  /** Exclusively claim `epoch` (throws [[ConcurrentEpochCommitException]]
+    * when another writer holds it), then decide against the committed
+    * tip read UNDER the claim, which no rival can move for this epoch: a
+    * tip already at or past `epoch` goes to `committed` (a merge's
+    * replay no-op, a maintenance call's refusal), anything else to
+    * `body`. The claim is released however either ends — a claim that
+    * escapes its commit wedges the epoch until the stale window.
     */
-  protected final def claimEpoch(epoch: Long): Unit = {
+  protected final def claimed[T](epoch: Long, committed: Long => T)
+                                (body: Option[Long] => T): T = {
     val f = claimFile(epoch)
     SinkFs.mkdirs(f.getParent)
-    EpochClaim.acquire(f, s"${getClass.getSimpleName}(${commitArtifact(epoch).getParent})", epoch)
+    EpochClaim.acquire(f, s"${getClass.getSimpleName}(${f.getParent})", epoch)
+    try committedEpoch match {
+      case Some(c) if c >= epoch => committed(c)
+      case tip => body(tip)
+    } finally EpochClaim.release(f)
   }
 
-  protected final def releaseClaim(epoch: Long): Unit =
-    EpochClaim.release(claimFile(epoch))
+  /** A merge's replay branch: foreachBatch retries an epoch when the job
+    * crashed between the sink's commit and Spark's checkpoint commit.
+    * The epoch is already durable then — re-merging would overwrite its
+    * artifacts WHILE reading the state that lives in them. Epochs are
+    * monotonic, so "committed version >= epoch" means such a replay: a
+    * logged no-op.
+    */
+  protected final def replayed(epoch: Long)(committed: Long): Boolean = {
+    CdcSink.warnReplay(
+      s"${getClass.getSimpleName}(${commitArtifact(epoch).getParent})",
+      epoch, committed)
+    false
+  }
+
+  /** Persist `rows` as `epoch`'s `c<epoch>/` change-delta sidecar — the
+    * `.ddl` file first (it pins every later read's schema: an epoch with
+    * an empty change set leaves a schemaless dir inference would throw
+    * on), then the parquet — and return the sidecar read back, so the
+    * feed and the merge share ONE evaluation (reducing over a tied pos
+    * is free to pick either event; two evaluations could diverge).
+    */
+  protected final def writeChangeSidecar(epoch: Long,
+                                         rows: DataFrame): DataFrame = {
+    val root = commitArtifact(epoch).getParent
+    val cdir = new HPath(root, s"c$epoch").toString
+    SinkFs.mkdirs(root)
+    SinkFs.writeString(new HPath(root, s"c$epoch.ddl"), rows.schema.toDDL)
+    rows.write.mode("overwrite").options(CdcSink.writeOptions).parquet(cdir)
+    rows.sparkSession.read.schema(rows.schema).parquet(cdir)
+  }
+
+  /** Changefeed fast path from `epoch`'s `c<epoch>/` sidecar, read under
+    * the schema its required `.ddl` file pins. Only valid when
+    * `prevEpoch` is the epoch's TRUE predecessor or the epoch is the
+    * table's first commit (epoch 0): after old versions are vacuumed
+    * away, `prevEpoch=None` means "serve a snapshot", and an incremental
+    * sidecar is not one. None = no sidecar to serve.
+    */
+  protected final def sidecarChanges(spark: SparkSession, epoch: Long,
+                                     prevEpoch: Option[Long])
+      : Option[DataFrame] = {
+    val root = commitArtifact(epoch).getParent
+    val cdir = new HPath(root, s"c$epoch")
+    if ((prevEpoch.isEmpty && epoch != 0L) || !SinkFs.isDirectory(cdir)) None
+    else Some(spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
+      CdcSink.requiredSidecar(new HPath(root, s"c$epoch.ddl"))))
+      .parquet(cdir.toString))
+  }
 
   /** Publish `epoch`: persist the commit timestamp and atomically swap
     * the CURRENT pointer to `content` — AFTER re-checking the pointer
@@ -313,20 +358,34 @@ object CdcSink {
         s"through v$committed (foreachBatch replay, or a caller whose epoch " +
         s"counter restarted below the sink's committed version)")
 
-  /** Read a `c<epoch>/` change-delta sidecar with its schema PINNED
-    * from the `.ddl` file its writer left (an empty epoch's sidecar has
-    * no parquet footers to infer from); legacy sidecars without one
-    * fall back to inference — they were always non-empty (the .ddl file
-    * ships with the same round that made empty sidecars writable).
+  /** The loud refusal of an on-disk format only earlier builds wrote —
+    * one rejection instead of one reader fallback per retired feature
+    * (Delta's protocol-version rule: a reader refuses a table version it
+    * does not know).
     */
-  private[streaming] def readSidecar(spark: SparkSession,
-                                     cdir: HPath): DataFrame = {
-    val ddlFile = new HPath(cdir.getParent, cdir.getName + ".ddl")
-    if (SinkFs.exists(ddlFile))
-      spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
-        SinkFs.readString(ddlFile))).parquet(cdir.toString)
-    else spark.read.parquet(cdir.toString)
-  }
+  private[streaming] def retiredFormat(dir: HPath, what: String): Nothing =
+    throw new IllegalStateException(
+      s"$dir: $what — an on-disk format only earlier builds wrote, which " +
+        "this build does not read; re-materialize the table into a fresh " +
+        "directory")
+
+  /** A commit sidecar every current commit writes (`.maxpos`,
+    * `.committs`, `c<epoch>.ddl`), trimmed; absent = a directory an
+    * earlier build wrote.
+    */
+  private[streaming] def requiredSidecar(f: HPath): String =
+    try SinkFs.readString(f).trim
+    catch {
+      case _: java.io.FileNotFoundException =>
+        retiredFormat(f.getParent, s"committed sidecar ${f.getName} is missing")
+    }
+
+  /** The max position a write job observed (`observe(obs, max(..) as
+    * "maxpos")`); None for an empty write.
+    */
+  private[streaming] def observedMax(
+      obs: org.apache.spark.sql.Observation): Option[Long] =
+    obs.get.get("maxpos").collect { case l: java.lang.Long => l.longValue() }
 
   /** Reclaim `c<epoch>/` change-delta sidecars (and their `.ddl`
     * files) below `floorEpoch` — the feed-retention half of vacuum for
@@ -375,8 +434,7 @@ object CdcSink {
   /** The FEED erosion floor: the max of the version vacuum's `_floor`
     * (version dirs backing diff-derivation are gone below it) and the
     * feed vacuum's `_feed_floor` (sidecars are gone below it) — either
-    * erosion makes epochs below unreadable as changes. Pre-r15 tables
-    * recorded both vacuums in `_floor`; reading the max stays correct.
+    * erosion makes epochs below unreadable as changes.
     */
   private[streaming] def feedFloor(root: HPath): Option[Long] = {
     val vs = Seq(readFloor(new HPath(root, "_floor")),
@@ -503,27 +561,14 @@ class MergeSink(dir: String, changefeedDelta: Boolean = false)
     *   - "insert": append-only — keys already in state are never replaced
     *   - "update": matched-only — keys NOT already in state are dropped
     */
-  def merge(batch: DataFrame, epochId: Long, mode: String): Boolean = {
+  def merge(batch: DataFrame, epochId: Long, mode: String): Boolean =
     // the epoch claim serializes concurrent writers that resolved the
     // same epoch number (stream foreachBatch racing ad-hoc SQL DML);
-    // the replay guard runs UNDER it so "already committed" is decided
-    // against a tip no rival can move for this epoch
-    claimEpoch(epochId)
-    try {
-      // foreachBatch retries an epoch when the job crashed between the
-      // sink's commit and Spark's checkpoint commit. The epoch is already
-      // durable then — re-merging would overwrite v<epoch> WHILE reading
-      // the CURRENT state that lives in it. Epochs are monotonic, so
-      // "committed version >= epoch" means this is such a replay: no-op.
-      val committed = committedEpoch
-      if (committed.exists(_ >= epochId)) {
-        CdcSink.warnReplay(s"MergeSink($dir)", epochId, committed.get)
-        return false
-      }
+    // the replay guard runs UNDER it
+    claimed(epochId, replayed(epochId)) { committed =>
       mergeClaimed(batch, epochId, mode, committed)
       true
-    } finally releaseClaim(epochId)
-  }
+    }
 
   private def mergeClaimed(batch: DataFrame, epochId: Long, mode: String,
                            committed: Option[Long]): Unit = {
@@ -566,25 +611,10 @@ class MergeSink(dir: String, changefeedDelta: Boolean = false)
       }
     }
     // persist the change delta FIRST and merge from the written files:
-    // one evaluation, and the feed is bit-identical to the merge input
-    // (reduceByKey over a tied pos is free to pick either event — two
-    // evaluations could diverge)
+    // the feed is bit-identical to the merge input
     val incoming =
       if (!changefeedDelta) incoming0
-      else {
-        val cdir = new HPath(root, s"c$epochId")
-        // the sidecar's schema travels as a .ddl file so EVERY future
-        // read pins it — an epoch with an empty change set (update-mode
-        // DML matching nothing) leaves a schemaless empty dir that
-        // inference-based reads would throw on
-        SinkFs.mkdirs(root)
-        SinkFs.writeString(new HPath(root, s"c$epochId.ddl"),
-          incoming0.schema.toDDL)
-        incoming0.write.mode("overwrite").options(CdcSink.writeOptions).parquet(cdir.toString)
-        // pinned schema: an EMPTY epoch's sidecar must still read (an
-        // inference-based read would fail on a schemaless empty dir)
-        spark.read.schema(incoming0.schema).parquet(cdir.toString)
-      }
+      else writeChangeSidecar(epochId, incoming0)
     val merged = prevState match {
       case None => incoming
       case Some(prev) =>
@@ -614,27 +644,17 @@ class MergeSink(dir: String, changefeedDelta: Boolean = false)
     merged.observe(obs, max(col("pos")).as("maxpos"))
       .write.mode("overwrite").options(CdcSink.writeOptions).parquet(new HPath(root, vname).toString)
     SinkFs.mkdirs(root)
-    recordMaxPos(epochId, obs.get.get("maxpos").collect {
-      case l: java.lang.Long => l.longValue()
-    })
+    recordMaxPos(epochId, CdcSink.observedMax(obs))
     publishEpoch(root, pointer, epochId, committed, vname)
   }
 
   /** Changefeed fast path from the `c<epoch>/` change-delta sidecar
-    * (present iff the epoch was written with `changefeedDelta`). The
-    * fast path is only valid when `prevEpoch` is the epoch's TRUE
-    * predecessor or the epoch is the table's first commit (epoch 0):
-    * after old versions are vacuumed away, `prevEpoch=None` means
-    * "serve a snapshot", and an incremental delta is not one — the
-    * diff fallback then serves the full state.
+    * (present iff the epoch was written with `changefeedDelta`; see
+    * [[CdcSink.sidecarChanges]]) — otherwise the diff fallback.
     */
   override def changesAt(spark: SparkSession, epoch: Long,
-                         prevEpoch: Option[Long]): Option[DataFrame] = {
-    if (prevEpoch.isEmpty && epoch != 0L) return None
-    val c = new HPath(root, s"c$epoch")
-    if (!SinkFs.isDirectory(c)) None
-    else Some(CdcSink.readSidecar(spark, c))
-  }
+                         prevEpoch: Option[Long]): Option[DataFrame] =
+    sidecarChanges(spark, epoch, prevEpoch)
 
   /** Delete version dirs (and their change-delta sidecars and commit
     * sidecars) BELOW the committed tip — the full-kind analog of the
@@ -674,19 +694,6 @@ class MergeSink(dir: String, changefeedDelta: Boolean = false)
     }
     dead.size
   }
-
-  /** Max merge position: the committed epoch's `.maxpos` sidecar first
-    * (O(1) driver metadata — see [[CdcSink.recordMaxPos]]), parquet
-    * footer statistics of the current version second (zero row I/O,
-    * pre-sidecar epochs — see [[SinkFs.parquetMaxLong]]), the trait's
-    * column scan last. Every DML statement resolves its position
-    * through this.
-    */
-  override def tipPos(spark: SparkSession): Option[Long] =
-    committedEpoch.flatMap(storedMaxPos)
-      .orElse(currentVersion.flatMap(v =>
-        SinkFs.parquetMaxLong(Seq(new HPath(root, v)), "pos")))
-      .orElse(super.tipPos(spark))
 
   /** Feed-retention vacuum (`CALL vacuum(..., retain_feed_epochs)`):
     * reclaim change-delta sidecars below `floorEpoch` without touching

@@ -200,60 +200,6 @@ private[graft] object SinkFs {
     else f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
   }
 
-  def mtime(p: HPath): Long = fs(p).getFileStatus(p).getModificationTime
-
-  /** Max of an INT64 column across the parquet files under `dirs`,
-    * from FOOTER STATISTICS alone — zero row I/O, the way Iceberg/Delta
-    * answer min/max questions from file-level stats instead of scans.
-    * The sinks use it for `tipPos` (the merge position every DML
-    * statement must outrank): a column scan is O(table bytes) where
-    * this is O(#files) driver-side metadata reads. None when any
-    * row-bearing file lacks the stat (caller falls back to the scan) or
-    * no rows exist at all; all-null columns in a file (e.g. open scd2
-    * rows' valid_to_pos) simply don't contribute.
-    */
-  def parquetMaxLong(dirs: Seq[HPath], column: String): Option[Long] = {
-    import scala.jdk.CollectionConverters._
-    val c = conf
-    var best = Long.MinValue
-    var any = false
-    dirs.foreach { d =>
-      val f = fs(d)
-      if (f.exists(d)) {
-        val files = f.listStatus(d).toSeq.filter(st =>
-          st.isFile && st.getPath.getName.endsWith(".parquet") &&
-            st.getLen > 0)
-        files.foreach { st =>
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(st, c))
-          try {
-            reader.getFooter.getBlocks.asScala
-              .filter(_.getRowCount > 0).foreach { block =>
-                block.getColumns.asScala
-                  .find(_.getPath.toDotString == column) match {
-                  case Some(col) =>
-                    val stats = col.getStatistics
-                    if (stats == null || stats.isEmpty)
-                      return None // stat missing where rows exist: scan
-                    if (stats.hasNonNullValue) {
-                      stats.genericGetMax match {
-                        case l: java.lang.Long =>
-                          if (l.longValue() > best) best = l.longValue()
-                          any = true
-                        case _ => return None // not INT64: scan
-                      }
-                    } // all-null block: contributes nothing
-                  case None => return None // column absent: scan
-                }
-              }
-          } finally reader.close()
-        }
-      }
-    }
-    if (any) Some(best) else None
-  }
-
   /** True when [[rename]] is atomic for `p`'s scheme: the `file:` nio
     * fast path and schemes with an `AbstractFileSystem` binding (hdfs,
     * viewfs). Object-store schemes (s3a and friends) are not. Force
@@ -296,13 +242,12 @@ private[graft] object SinkFs {
     body + f"#crc32:${c.getValue}%08x\n"
   }
 
-  /** The framed payload's content when the frame validates; the raw
-    * content when unframed and `strict` is off (legacy pointers written
-    * by atomic-rename code paths, which cannot tear); None = torn.
+  /** The framed payload's content when the frame validates; None =
+    * torn, corrupt or unframed.
     */
-  private[graft] def unframe(raw: String, strict: Boolean): Option[String] = {
+  private[graft] def unframe(raw: String): Option[String] = {
     val idx = raw.lastIndexOf("#crc32:")
-    if (idx < 0) { if (strict) None else Some(raw) }
+    if (idx < 0) None
     else {
       val body = raw.substring(0, idx)
       val c = new java.util.zip.CRC32
@@ -313,9 +258,10 @@ private[graft] object SinkFs {
   }
 
   /** Read a CURRENT-pointer payload (trimmed). All pointer READS go
-    * through this: it validates the [[frame]] when one is present and
-    * retries briefly on a torn or transiently unreadable payload — on
-    * atomic-rename schemes the first read always succeeds; on
+    * through this: it requires a valid [[frame]] and retries briefly on
+    * a torn or transiently unreadable payload — on atomic-rename
+    * schemes the first read always succeeds (an unframed payload there
+    * is refused at once as a retired format); on
     * overwrite-in-place schemes this is the reader half of the commit
     * protocol. A genuinely missing pointer still surfaces as the
     * underlying FileNotFoundException (callers `exists`-guard — absence
@@ -323,7 +269,7 @@ private[graft] object SinkFs {
     * overwrites and never unlinks).
     */
   def readPointer(p: HPath): String = {
-    val strict = !renameAtomic(p)
+    val atomic = renameAtomic(p)
     val maxAttempts = 200
     var attempt = 0
     while (true) {
@@ -334,13 +280,18 @@ private[graft] object SinkFs {
           case e: java.io.FileNotFoundException => throw e
           case NonFatal(_) if attempt < maxAttempts => None
         }
-      raw.flatMap(unframe(_, strict)) match {
+      raw.flatMap(unframe) match {
         case Some(content) => return content.trim
+        case None if atomic && raw.exists(!_.contains("#crc32:")) =>
+          // an atomic-rename swap cannot tear, so an unframed payload is
+          // a pointer an earlier build wrote
+          CdcSink.retiredFormat(p.getParent, "unframed CURRENT pointer")
         case None if attempt >= maxAttempts =>
           throw new java.io.IOException(
             s"pointer $p torn or unreadable after $attempt attempts — " +
               "a writer crashed mid-overwrite on a no-atomic-rename " +
-              "scheme, or the store is eventually consistent")
+              "scheme, the store is eventually consistent, or the " +
+              "pointer is unframed (written by an earlier build)")
         case None =>
           // first misses spin (the common mid-swap window is µs), the
           // tail backs off to ~5ms — worst case ~1s before the loud

@@ -95,13 +95,13 @@ class BucketedMergeSinkSpec extends AnyFunSuite {
     val sink = new BucketedMergeSink(
       Files.createTempDirectory("bsink").toString, buckets = 16)
     sink.merge(feed.filter(col("op") === "r"), 0L)
-    val m0 = sink.manifest
+    val m0 = sink.manifest.base
     assert(m0.size == 16, s"snapshot should populate all buckets, got ${m0.size}")
     // narrow update batch: a handful of keys → a few buckets
     val narrow = feed.filter(col("op") === "u" && col("key.c_custkey") < 20)
     assert(narrow.count() > 0)
     sink.merge(narrow, 1L)
-    val m1 = sink.manifest
+    val m1 = sink.manifest.base
     val rewritten = m1.count { case (b, p) => m0(b) != p }
     assert(rewritten < 16, "narrow batch rewrote every bucket")
     assert(m1.exists { case (b, p) => m0(b) == p },

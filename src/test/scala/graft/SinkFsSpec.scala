@@ -205,19 +205,19 @@ class SinkFsSpec extends AnyFunSuite {
     // epoch 2 hit compactEvery=3: the fold must carry the tip unchanged
     assert(sink.manifest.deltas.isEmpty, "compaction should have run")
     assert(sink.tipPos(spark).contains(600000L))
-    // legacy upgrade: drop the sidecars — footer fallback still answers,
-    // and the next commit re-bootstraps the sidecar from footers
-    java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      .filter(_.getFileName.toString.endsWith(".maxpos"))
-      .forEach(java.nio.file.Files.delete(_))
-    assert(sink.tipPos(spark).contains(600000L), "footer fallback")
     assert(sink.merge(envBatch((4, "u4", "u")).withColumn("source",
       struct(lit(550000L).as("pos"))), 3L))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "m3.manifest.maxpos")),
-      "commit over a legacy table must bootstrap the sidecar")
     // 550000 < the deleted key's 600000: the tip must NOT move backwards
     assert(sink.tipPos(spark).contains(600000L))
+    // a committed epoch without its sidecar (a table an earlier build
+    // wrote) is refused loudly by both readers — tipPos and the next
+    // merge's tip arithmetic — never answered from a footer scan
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "m3.manifest.maxpos"))
+    for (e <- Seq(intercept[IllegalStateException](sink.tipPos(spark)),
+                  intercept[IllegalStateException](sink.merge(envBatch(
+                    (5, "u5", "u")), 4L))))
+      assert(e.getMessage.contains("m3.manifest.maxpos") &&
+        e.getMessage.contains("re-materialize"), e.getMessage)
   }
 
   test("point lookups and rename work through the URI root") {

@@ -1,7 +1,12 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's t2 correctness gate — dtype-strict.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [q1,q2,...]
+
+Judges the queries the Verify run selected (its selected.json; every
+query when absent), narrowed further by the optional third argument.
+A selected query without output is a FAIL; the others count as not
+selected.
 
 Loads each <name>.parquet written by graft.Verify, runs the matching SQL from
 oracle_sql.json in DuckDB over the base tables of <sfDir>, and compares
@@ -57,8 +62,14 @@ def main(sf_dir, out_dir, only=None):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    try:
+        selected = set(json.load(open(f"{out_dir}/selected.json")))
+    except FileNotFoundError:
+        selected = set(oracle)
     if only:
-        oracle = {k: v for k, v in oracle.items() if k in only}
+        selected &= only
+    n_skip = len(set(oracle) - selected)
+    oracle = {k: v for k, v in oracle.items() if k in selected}
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
         try:
@@ -87,7 +98,7 @@ def main(sf_dir, out_dir, only=None):
         except Exception as e:
             print(f"FAIL {name}: {type(e).__name__}: {e}")
             n_bad += 1
-    print(f"\n{n_ok} ok, {n_bad} failed")
+    print(f"\n{n_ok} ok, {n_bad} failed, {n_skip} not selected")
     return 1 if n_bad else 0
 
 
